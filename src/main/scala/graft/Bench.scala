@@ -7,7 +7,9 @@ import scala.jdk.CollectionConverters._
 /** Benchmark main: times every declared query at the given scale factor and
   * emits ONE JSON line (stdout + target/bench_out.json for robust machine
   * parsing — target/, not the repo root, so a stale local run can never be
-  * mistaken for an adjudicated artifact).
+  * mistaken for an adjudicated artifact), then a compact totals-only
+  * summary line (stdout + target/bench_summary.json). Each file holds one
+  * JSON object.
   * Failures are recorded per-query under "errors", never as fake timings.
   *
   * Noise attribution: this host is shared, and two rounds of forensics showed
@@ -310,7 +312,8 @@ object Bench {
     println(summary)
     System.out.flush()
     Files.createDirectories(Paths.get("target"))
-    Files.writeString(Paths.get("target/bench_out.json"), line + "\n" + summary + "\n")
+    Files.writeString(Paths.get("target/bench_out.json"), line + "\n")
+    Files.writeString(Paths.get("target/bench_summary.json"), summary + "\n")
     spark.stop()
   }
 }

@@ -444,14 +444,14 @@ object GraphQueries {
     // then id asc) so the backbone and the counts are deterministic.
     // G4 (EXT, round 11): CONNECTED COMPONENTS via the alternating
     // two-phase star algorithm (Kiveris et al. SoCC 2014) — O(log n)
-    // rounds even on path graphs, where min-label propagation
-    // (Dedup.clusters) pays O(diameter); the CC algorithm for graphs
-    // whose diameter is unknown at 100 TB. The declared instance runs on
-    // the 1-in-97-orders trading subgraph so the DuckDB oracle can
-    // re-derive the labels INDEPENDENTLY by recursive min-label closure
-    // (a different algorithm — an agreement, not a replay); the log-round
-    // property itself is proven in GraphQueriesSpec on planted paths
-    // against the propagation round count.
+    // rounds even on path graphs, where min-label propagation pays
+    // O(diameter); the CC algorithm for graphs whose diameter is unknown
+    // at 100 TB, and the same core Dedup.clusters runs. The declared
+    // instance runs on the 1-in-97-orders trading subgraph so the DuckDB
+    // oracle can re-derive the labels INDEPENDENTLY by recursive min-label
+    // closure (a different algorithm — an agreement, not a replay); the
+    // log-round property itself is asserted in GraphQueriesSpec on a
+    // 256-node path.
     "g4_connected_components" -> ((s, d) => {
       val pairs = Tables.orders(s, d)
         .where(pmod(col("o_orderkey"), lit(97)) === 0)

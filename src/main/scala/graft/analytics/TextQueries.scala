@@ -811,10 +811,10 @@ object TextQueries {
     // (exactly MinHash banding with the identity hash — two one-row bands,
     // so a pair collides with probability 1-(1-j)^2, near 1 for the ~0.97
     // planted dups), verify with exact Jaccard ≥ 0.5, then run the SAME
-    // Dedup.clusters min-label loop the cascade uses. The oracle re-derives
-    // the components with a DuckDB recursive CTE. The corpus plants
-    // multi-node components (45-267-413 at sf0.01), so the propagation is
-    // genuinely transitive, not just pair-echo.
+    // Dedup.clusters (two-phase star components) the cascade uses. The
+    // oracle re-derives the components with a DuckDB recursive CTE. The
+    // corpus plants multi-node components (45-267-413 at sf0.01), so the
+    // closure is genuinely transitive, not just pair-echo.
     //
     // Blocking goes through Dedup.blockPairs — the capped collect+explode
     // shape every other candidate-pair path uses — NOT a raw self-join on

@@ -48,11 +48,18 @@ object SolanaNormalizer {
     * uiTokenAmount field but uiAmount). Catalyst's own from_json pruning
     * (OptimizeCsvJsonExprs) cannot do this here because `m.meta` is
     * referenced AS A STRUCT by the no-meta guard, which pins all of meta's
-    * fields. Semantics are unchanged: from_json yields a null struct for
-    * an absent/null key regardless of which subfields the schema keeps, so
-    * the meta.isNotNull guard and both token-array presence checks see
-    * exactly what they saw under the full schema, and every emitted column
-    * derives from a retained field.
+    * fields. Well-formed envelopes normalize exactly as under the full
+    * schema: from_json yields a null struct for an absent/null key
+    * regardless of which subfields the schema keeps, so the meta.isNotNull
+    * guard and both token-array presence checks see what they saw before,
+    * and every emitted column derives from a retained field.
+    *
+    * Divergence on malformed envelopes (pinned in NormalizerSpec): a
+    * type-corrupt value in a pruned field (`"fee": "x"`, a string
+    * `uiTokenAmount.decimals`, …) is never type-checked, so the row still
+    * emits its entries. The reference deserializes the whole envelope into
+    * typed structs and emits nothing when that fails
+    * (`solana_parser.rs:12`).
     */
   private[graft] val parseSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._

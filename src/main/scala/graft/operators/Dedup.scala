@@ -760,104 +760,30 @@ object Dedup {
       .agg(count(lit(1)).as("shared_chunks"))
   }
 
-  /** Union near-dup pairs into clusters: iterative min-label propagation
-    * (each node takes the smallest id reachable through its neighbours)
-    * until fixpoint, capped at `maxIter` rounds — converges in
-    * O(cluster diameter) iterations, and near-dup clusters are shallow in
-    * practice. The driver-side loop is control flow only (the per-round
-    * count is the convergence test); all data movement is joins.
-    * `localCheckpoint` truncates the growing lineage each round so plans
-    * stay constant-size at scale.
+  /** Union near-dup pairs into clusters: the connected components of the
+    * pair graph restricted to `ids`, computed by the two-phase star
+    * algorithm ([[GraphOps.connectedComponents]], O(log n) rounds on any
+    * component shape, so a deep near-dup chain converges instead of
+    * hitting a round cap).
+    *
+    * A pair counts only when BOTH endpoints are in `ids`: the output
+    * contract is one row per id and clustering over ids only, so an
+    * endpoint outside the id set neither appears in the output nor bridges
+    * two ids into one cluster (the caller excluded it on purpose). Only
+    * ids on an edge enter the star rounds — near-dup graphs are sparse,
+    * |edge nodes| ≪ |corpus| — and the rest come back as singletons.
     *
     * @return (id, cluster) where cluster = min id in the component
     */
-  def clusters(ids: DataFrame, idCol: String, pairs: DataFrame,
-      maxIter: Int = 50): DataFrame =
-    clustersCounted(ids, idCol, pairs, maxIter)._1
-
-  /** [[clusters]] plus the number of propagation rounds actually run —
-    * the scaling observable: rounds track component DIAMETER, not corpus
-    * size, so a growing corpus with constant-shape near-dup clusters must
-    * show a constant round count (ScaleCheck asserts exactly that).
-    */
-  def clustersCounted(ids: DataFrame, idCol: String, pairs: DataFrame,
-      maxIter: Int = 50): (DataFrame, Int) = {
+  def clusters(ids: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
     val idSet = ids.select(col(idCol).as("id"))
-    // Edges restricted to BOTH endpoints ∈ ids: the output contract is one
-    // row per id and clustering-over-ids-only — a pair endpoint outside the
-    // id set must neither appear in the output nor bridge two ids into one
-    // cluster (the caller excluded it on purpose).
-    //
-    // r17: repartition(dst) + persist, NOT localCheckpoint — an
-    // InMemoryRelation PRESERVES outputPartitioning through planning (the
-    // g4_pagerank adhocEdges lesson), so the per-round gather join reads
-    // the edge side exchange-free every round; a checkpointed (RDD-backed)
-    // edge list re-Exchanged the FULL edge set by dst once per round.
-    // Materialized stats also let the planner broadcast a small edge set
-    // on later rounds — scale-adaptive by statistics, not by a constant.
-    // Unpersisted before return (the result references only checkpointed
-    // label rounds, never this relation).
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionAll(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .join(idSet.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
       .join(idSet.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-      .repartition(col("dst"))
-      .persist()
-    // Propagate only over ids that appear in an edge: an isolated id can
-    // never change its label, and near-dup graphs are sparse — |edge nodes|
-    // ≪ |corpus| — so every round's join and aggregate run on the small
-    // set. The untouched ids rejoin as their own singleton clusters at the
-    // end. Per-round cost is O(|edges|), not O(|corpus|).
-    //
-    // r17: the initial label relation is LAZY (no checkpoint of its own) —
-    // the distinct folds into round 0's job, one whole job cheaper per
-    // call; the singleton anti-join at the end keys on the FINAL labels
-    // (same id set: every round preserves the id column).
-    var labels = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("cluster"))
-    var changed = true
-    var i = 0
-    while (changed) {
-      // allow maxIter label-changing rounds plus the confirming round: a
-      // chain of diameter exactly maxIter converges on round maxIter-1 and
-      // confirms on round maxIter — only round maxIter+1 means divergence
-      if (i > maxIter) throw new IllegalStateException(
-        s"clusters() did not converge within $maxIter iterations — " +
-          "a near-dup chain is deeper than maxIter; raise maxIter")
-      val neighbourMin = edges
-        .join(labels.withColumnRenamed("id", "dst"), Seq("dst"))
-        .groupBy(col("src").as("id"))
-        .agg(min(col("cluster")).as("nbr_cluster"))
-      // The convergence flag is computed IN the same pass as the label
-      // update (old vs new compared before the old column is dropped) — a
-      // separate next⋈labels diff join would add a full extra join per
-      // round just to answer "did anything move". r16: the moved-count
-      // rides the checkpoint job as an observe() metric — ONE job per
-      // round instead of two (ClusterProbe measured the loop at 1.3 s for
-      // a 256-edge graph: pure per-round job overhead). The explicit
-      // count stays as the fallback if metric delivery misses the poll
-      // window (see [[Observed]]).
-      val obs = org.apache.spark.sql.Observation()
-      val step = labels
-        .join(neighbourMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("cluster"), coalesce(col("nbr_cluster"), col("cluster")))
-            .as("cluster"),
-          (col("nbr_cluster") < col("cluster")).as("_moved"))
-        .observe(obs, coalesce(sum(when(col("_moved"), 1L).otherwise(0L)),
-          lit(0L)).as("_n_moved"))
-        .localCheckpoint(true)
-      changed = Observed.long(obs, "_n_moved")
-        .map(_ > 0L)
-        .getOrElse(step.filter(col("_moved")).limit(1).count() > 0)
-      labels = step.drop("_moved")
-      i += 1
-    }
-    edges.unpersist(blocking = false)
-    val singletons = ids.select(col(idCol).as("id"))
-      .join(labels.select(col("id")), Seq("id"), "left_anti")
-      .select(col("id"), col("id").as("cluster"))
-    (labels.unionByName(singletons), i)
+    val labels = GraphOps.connectedComponents(edges)._1
+      .select(col("node").as("id"), col("component").as("cluster"))
+    idSet.join(labels, Seq("id"), "left")
+      .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
   }
 
   /** End-to-end near-dup removal: MinHash/LSH pairs → transitive clusters →

@@ -57,30 +57,6 @@ object GraphOps {
     deg.join(perNode, Seq("v"), "left").na.fill(0L, Seq("triangles"))
   }
 
-  /** Connected components via the ALTERNATING two-phase star algorithm
-    * (Kiveris, Lattanzi, Mirrokni, Rastogi & Vassilvitskii, SoCC 2014 —
-    * "Connected Components in MapReduce and Beyond"): each round runs
-    * LARGE-STAR (every strictly-larger neighbour of u rewires to the
-    * minimum of u's closed neighbourhood) then SMALL-STAR (every
-    * not-larger neighbour, and u itself, rewires to that minimum),
-    * converging in O(log n) rounds EVEN ON PATH GRAPHS — the property
-    * min-label propagation ([[graft.operators.Dedup.clusters]], O(diameter)
-    * rounds) lacks, and the reason this is the CC algorithm for 100 TB
-    * graphs whose diameter is unknown. Every phase is one groupBy + one
-    * equi-join over the edge list; edges only ever rewire toward smaller
-    * ids, so the edge count never grows past the input and the fixpoint
-    * is the star forest (root = component minimum).
-    *
-    * Convergence test: per-round (count, xxhash64 checksum) of the
-    * canonical edge set — one tiny aggregate, no except(). A checksum
-    * collision could only stop a round early, and the declared query's
-    * DuckDB oracle re-derives the labels independently, so it would
-    * surface as a hash-gate failure, not silent corruption.
-    *
-    * @param edges0 directed or undirected pair list with columns
-    *               `src`, `dst`; self-loops and duplicates removed here
-    * @return ((node, component = min id in the component), rounds run)
-    */
   /** Synchronous label propagation (Raghavan et al. 2007), deterministic
     * variant: labels start as the node id; each round every node
     * simultaneously adopts the most frequent label among its neighbors,
@@ -124,8 +100,37 @@ object GraphOps {
     labels
   }
 
-  def connectedComponents(edges0: DataFrame,
-      maxIter: Int = 40): (DataFrame, Int) = {
+  /** Round cap of [[connectedComponents]]. Rounds grow with log n, not
+    * with diameter (8 rounds on a path of diameter 120), so the cap is
+    * never the binding limit on a real graph.
+    */
+  private val MaxRounds = 40
+
+  /** Connected components via the ALTERNATING two-phase star algorithm
+    * (Kiveris, Lattanzi, Mirrokni, Rastogi & Vassilvitskii, SoCC 2014 —
+    * "Connected Components in MapReduce and Beyond"): each round runs
+    * LARGE-STAR (every strictly-larger neighbour of u rewires to the
+    * minimum of u's closed neighbourhood) then SMALL-STAR (every
+    * not-larger neighbour, and u itself, rewires to that minimum),
+    * converging in O(log n) rounds EVEN ON PATH GRAPHS, where min-label
+    * propagation needs O(diameter) — the reason this is the CC algorithm
+    * for 100 TB graphs whose diameter is unknown, and the one core behind
+    * both g4_connected_components and [[Dedup.clusters]]. Every phase is
+    * one groupBy + one equi-join over the edge list; edges only ever rewire
+    * toward smaller ids, so the edge count never grows past the input and
+    * the fixpoint is the star forest (root = component minimum).
+    *
+    * Convergence test: per-round (count, xxhash64 checksum) of the
+    * canonical edge set — one tiny aggregate, no except(). A checksum
+    * collision could only stop a round early, and the declared query's
+    * DuckDB oracle re-derives the labels independently, so it would
+    * surface as a hash-gate failure, not silent corruption.
+    *
+    * @param edges0 directed or undirected pair list with columns
+    *               `src`, `dst`; self-loops and duplicates removed here
+    * @return ((node, component = min id in the component), rounds run)
+    */
+  def connectedComponents(edges0: DataFrame): (DataFrame, Int) = {
     def canon(df: DataFrame, a: String, b: String): DataFrame =
       df.select(least(col(a), col(b)).as("lo"),
           greatest(col(a), col(b)).as("hi"))
@@ -140,9 +145,9 @@ object GraphOps {
       (r.getLong(0), r.getLong(1))
     }
     // r16: the (count, checksum) fingerprint rides each round's checkpoint
-    // job as observe() metrics — one job per round instead of two (the
-    // same job-overhead term ClusterProbe measured on the min-label loop);
-    // the explicit aggregate stays as the delivery-miss fallback.
+    // job as observe() metrics — one job per round instead of two (on a
+    // few-hundred-edge graph the per-round job launch IS the cost); the
+    // explicit aggregate stays as the delivery-miss fallback.
     def observedCheckpoint(df: DataFrame): (DataFrame, (Long, Long)) = {
       val obs = org.apache.spark.sql.Observation()
       val cp = df.observe(obs, count(lit(1)).as("n"),
@@ -157,8 +162,8 @@ object GraphOps {
     var rounds = 0
     var stable = fp._1 == 0L
     while (!stable) {
-      if (rounds >= maxIter) throw new IllegalStateException(
-        s"connectedComponents did not converge within $maxIter rounds")
+      if (rounds >= MaxRounds) throw new IllegalStateException(
+        s"connectedComponents did not converge within $MaxRounds rounds")
       // LARGE-STAR: m(u) = min(Γ(u) ∪ {u}); (v, m(u)) for v ∈ Γ(u), v > u
       //
       // r17 plan-shape note (measured via plans/r17/cc_round_before.txt):

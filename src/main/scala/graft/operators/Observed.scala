@@ -4,10 +4,10 @@ import org.apache.spark.sql.Observation
 
 /** Read an [[Observation]]'s metrics just after the materializing action.
   *
-  * Iterative operators (min-label clusters, alternating-star CC) pay one
-  * Spark job per round for materialization (eager localCheckpoint) and —
-  * before r16 — a SECOND job per round just to answer "did anything
-  * change". Attaching the convergence aggregate as an observe() metric
+  * Iterative operators (the alternating-star CC behind g4 and
+  * Dedup.clusters) pay one Spark job per round for materialization
+  * (eager localCheckpoint) and — before r16 — a SECOND job per round just
+  * to answer "did anything change". Attaching the convergence aggregate as an observe() metric
   * delivers it WITH the checkpoint job. Metric delivery rides the
   * SQL-execution-end listener, which is asynchronous to the action
   * returning, so this polls briefly; `None` (never observed on this
@@ -32,7 +32,4 @@ private[graft] object Observed {
       None
     } else Some(m)
   }
-
-  def long(obs: Observation, key: String, waitMs: Long = 500): Option[Long] =
-    metrics(obs, waitMs).map(_(key).asInstanceOf[Long])
 }

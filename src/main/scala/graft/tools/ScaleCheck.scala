@@ -205,31 +205,32 @@ object ScaleCheck {
       "linear = 10; assignment is NearestCentroidExpr's in-expression " +
       "loop — zero shuffle, no n*k row term, constant driver memory)")
 
-    // Dedup.clusters: synthetic edge sets at N and 10N edges with CONSTANT
-    // component shape (4-node paths, diameter 3) — the regime a growing
-    // near-dup corpus exhibits: MORE clusters, not deeper ones. Per-round
-    // cost is O(|edges|) and rounds track component diameter, so time
-    // should grow ~10x with an IDENTICAL round count.
+    // Connected components (the core under Dedup.clusters): synthetic edge
+    // sets at N and 10N edges with CONSTANT component shape (4-node paths,
+    // diameter 3) — the regime a growing near-dup corpus exhibits: MORE
+    // clusters, not deeper ones. Every id is on an edge, so no singletons
+    // are involved. Per-round cost is O(|edges|) and the star rounds are
+    // bounded by log(diameter), so time should grow ~10x with an IDENTICAL
+    // round count.
     def pathEdges(n: Long) = spark.range(3L * n)
-      .select(((col("id") / 3).cast("long") * 4 + col("id") % 3).as("id_a"))
-      .withColumn("id_b", col("id_a") + 1)
-    def timedClusters(what: String, n: Long): (Int, Double) = {
-      val ids = spark.range(4L * n).select(col("id").as("doc_id"))
-        .localCheckpoint(true)
+      .select(((col("id") / 3).cast("long") * 4 + col("id") % 3).as("src"))
+      .withColumn("dst", col("src") + 1)
+    def timedComponents(what: String, n: Long): (Int, Double) = {
       val edges = pathEdges(n).localCheckpoint(true)
       val t0 = System.nanoTime()
-      val (labels, rounds) = Dedup.clustersCounted(ids, "doc_id", edges)
+      val (labels, rounds) = graft.operators.GraphOps.connectedComponents(edges)
       labels.write.format("noop").mode("overwrite").save()
       val s = (System.nanoTime() - t0) / 1e9
       println(f"$what%-20s $s%7.2f s ($rounds rounds)")
       (rounds, s)
     }
     val cn = 100000L
-    timedClusters("clusters warmup", cn)
-    val (cr1, ct1) = timedClusters("clusters 1x", cn)
-    val (cr10, ct10) = timedClusters("clusters 10x", 10 * cn)
-    println(f"clusters ratio: ${ct10 / ct1}%.1f (linear = 10; rounds " +
-      s"$cr1 -> $cr10, diameter-bound so must be equal)")
+    timedComponents("components warmup", cn)
+    val (cr1, ct1) = timedComponents("components 1x", cn)
+    val (cr10, ct10) = timedComponents("components 10x", 10 * cn)
+    println(f"components ratio: ${ct10 / ct1}%.1f (linear = 10; rounds " +
+      s"$cr1 -> $cr10, constant component shape => equal rounds, " +
+      "log-diameter bound)")
 
     // As-of join under key skew: 90% of both sides on ONE hot asset. The
     // union+window formulation shuffles once on the key, so the hot key

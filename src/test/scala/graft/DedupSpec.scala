@@ -437,13 +437,29 @@ class DedupSpec extends SparkSpec {
     assert(out.forall(p => math.abs(p._3 - 1.0) < 1e-6))
   }
 
-  test("clusters: min-label propagation closes transitive chains") {
+  test("clusters: transitive chains close to their min-id label") {
     val ids = (0L to 5L).toDF("doc_id")
     // chain 0-1, 1-2 (0 and 2 never paired directly); separate pair 4-5
     val pairs = Seq((0L, 1L), (1L, 2L), (4L, 5L)).toDF("id_a", "id_b")
     val out = Dedup.clusters(ids, "doc_id", pairs)
       .orderBy("id").as[(Long, Long)].collect().toSeq
     assert(out == Seq((0L, 0L), (1L, 0L), (2L, 0L), (3L, 3L), (4L, 4L), (5L, 4L)))
+  }
+
+  test("clusters: a chain of diameter 120 converges; isolated ids stay singletons; outside ids never bridge") {
+    // ids 0..159: a path 0-1-…-120 (diameter 120), a pair 140-141, and
+    // isolated ids 121..139 and 142..159. Id 999 is NOT in the id set: the
+    // pairs 120-999 and 999-140 must not merge the path with 140-141.
+    val ids = (0L to 159L).toDF("doc_id")
+    val path = (0L until 120L).map(i => (i, i + 1))
+    val pairs = (path ++ Seq((140L, 141L), (120L, 999L), (999L, 140L)))
+      .toDF("id_a", "id_b")
+    val out = Dedup.clusters(ids, "doc_id", pairs)
+      .as[(Long, Long)].collect().toSeq
+    val expected = (0L to 159L).map { id =>
+      id -> (if (id <= 120L) 0L else if (id == 141L) 140L else id)
+    }
+    assert(out.sorted == expected)
   }
 
   test("dedupNearDups keeps one canonical doc per near-dup cluster") {

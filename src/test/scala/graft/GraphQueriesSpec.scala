@@ -141,22 +141,29 @@ class GraphQueriesSpec extends SparkSpec {
     assert(rounds <= 16, s"expected O(log n) rounds on a path, got $rounds")
   }
 
-  test("connected components: differential vs min-label propagation on a random graph") {
+  test("connected components: differential vs union-find") {
     import spark.implicits._
     val rnd = new scala.util.Random(23L)
     // ~3 sparse clusters plus isolates-by-construction excluded
-    val edges = (1 to 300).map { _ =>
+    val pairs = (1 to 300).map { _ =>
       val c = rnd.nextInt(6) * 1000
       (f"v${c + rnd.nextInt(40)}%05d", f"v${c + rnd.nextInt(40)}%05d")
-    }.filter(p => p._1 != p._2).toDF("src", "dst")
-    val (labels, _) = graft.operators.GraphOps.connectedComponents(edges)
+    }.filter(p => p._1 != p._2)
+    val (labels, _) = graft.operators.GraphOps.connectedComponents(
+      pairs.toDF("src", "dst"))
     val star = labels.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val ids = edges.select(col("src").as("id"))
-      .unionAll(edges.select(col("dst").as("id"))).distinct()
-    val prop = graft.operators.Dedup.clusters(ids, "id",
-        edges.select(col("src").as("id_a"), col("dst").as("id_b")))
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(star == prop, "two-phase star and min-label propagation disagree")
+    // union-find reference: canonical label = min id in the component
+    val parent = scala.collection.mutable.Map.empty[String, String]
+    def find(x: String): String = parent.getOrElseUpdate(x, x) match {
+      case `x` => x
+      case p => val r = find(p); parent(x) = r; r
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    val expected = parent.keys.toSeq.map(v => v -> find(v)).toMap
+    assert(star == expected, "two-phase star and union-find disagree")
   }
 
   test("g4_connected_components: every declared label is a member node and edges never cross labels") {

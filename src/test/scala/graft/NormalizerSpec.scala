@@ -76,6 +76,31 @@ class NormalizerSpec extends SparkSpec {
     assert(SolanaNormalizer.normalize(bad).count() == 0)
   }
 
+  test("type-corrupt value in a pruned field still emits entries (divergence from the reference)") {
+    import spark.implicits._
+    import graft.model.Transaction
+    // fee and uiTokenAmount.decimals are not in the pruned parse schema, so
+    // a string where the reference's serde types demand a number is never
+    // type-checked. The reference fails the whole envelope
+    // (solana_parser.rs:12) and emits nothing; this normalizer emits the
+    // same entries as for the clean envelope. Pinned, not endorsed.
+    val clean = LedgerQueries.fixtures.toMap
+    val corrupt = Seq(
+      "tx1" -> clean("tx1").replace("\"fee\": 5000", "\"fee\": \"x\""),
+      "tx2" -> clean("tx2").replace("\"decimals\": 6", "\"decimals\": \"six\""))
+    corrupt.foreach { case (id, raw) => assert(raw != clean(id), s"$id not corrupted") }
+    val bronze = corrupt.map { case (id, raw) =>
+      Transaction(id, s"user_$id", LedgerQueries.W, 0L, s"hash_$id", "solana", raw)
+    }.toDF()
+    val out = SolanaNormalizer.normalize(bronze)
+      .select("transaction_id", "asset_symbol", "amount")
+      .collect()
+      .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
+      .toSet
+    assert(out == silver.filter(e => e._1 == "tx1" || e._1 == "tx2"))
+    assert(out.nonEmpty)
+  }
+
   test("two bronze rows sharing a tx_hash (two tracked wallets) get distinct silver ids") {
     import spark.implicits._
     import graft.model.Transaction

@@ -10,8 +10,8 @@ import scala.util.Random
   *
   *  - [[AsOfJoin]] vs "scan the whole quote list per trade" — duplicate
   *    timestamps, quote-less keys, strict + inclusive modes;
-  *  - [[Dedup.clusters]] (iterative min-label propagation) vs union-find
-  *    connected components.
+  *  - [[Dedup.clusters]] (two-phase star connected components) vs
+  *    union-find connected components.
   */
 class OperatorPropertySpec extends SparkSpec {
   import spark.implicits._
